@@ -256,11 +256,18 @@ final class TopicTableSink(path: String) extends Serializable {
   *
   * Scale posture: the table is laid out as `bucket=hash(rowkey)%N` parquet
   * partitions. An upsert touches ONLY the buckets present in the batch:
-  * read-side partition pruning on `bucket`, merge, write the merged buckets
-  * to a staging dir, then a per-bucket rename-aside swap. Cost per
+  * read the touched `bucket=k` dirs, merge, write the merged buckets to a
+  * staging dir, then a per-bucket rename-aside swap. Every read goes
+  * through one reader that is handed the bucket dirs and the sink's fixed
+  * cell schema, so listing and parquet footer reads are O(touched buckets)
+  * and no schema-inference job runs; untouched buckets' files are never
+  * listed, opened or rewritten (asserted in StreamJobsSpec). Cost per
   * micro-batch is O(touched buckets), not O(table) — the same shape as a
-  * Delta/Hudi MERGE or an HBase regionserver write path; untouched buckets'
-  * files are never rewritten (asserted in StreamJobsSpec).
+  * Delta/Hudi MERGE or an HBase regionserver write path.
+  *
+  * A batch must carry exactly the cell columns (rowkey, cf, qualifier,
+  * cell_value, ts), with or without `op`; any other column set is rejected
+  * before anything is written.
   */
 final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializable {
   import org.apache.hadoop.fs.{FileSystem, Path}
@@ -268,10 +275,48 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn("bucket", pmod(xxhash64(col("rowkey")), lit(numBuckets)).cast("int"))
 
-  /** Normalize the op column so plain-put batches and MERGE batches share
-    * one merge path. */
-  private def withOp(df: DataFrame): DataFrame =
-    if (df.columns.contains("op")) df else df.withColumn("op", lit("upsert"))
+  /** Check the batch's columns and normalize the op column so plain-put
+    * batches and MERGE batches share one merge path; columns come out in
+    * the table's order. */
+  private def withOp(df: DataFrame): DataFrame = {
+    val cells = KvUpsertSink.cellColumns
+    if (df.columns.toSet != cells.toSet && df.columns.toSet != (cells :+ "op").toSet)
+      throw new IllegalArgumentException(
+        s"KvUpsertSink: batch columns [${df.columns.mkString(", ")}] must be " +
+          s"[${cells.mkString(", ")}] with or without op")
+    val withOpCol = if (df.columns.contains("op")) df else df.withColumn("op", lit("upsert"))
+    withOpCol.select((cells :+ "op").map(col): _*)
+  }
+
+  /** The table's only read path: the `bucket=k` dirs of `buckets` that
+    * exist, read with the fixed cell schema — nothing else is listed and no
+    * schema-inference job runs. A missing or null `op` (tables written
+    * before the MERGE extension) reads as 'upsert'. None when none of the
+    * buckets exists. */
+  private def readBuckets(spark: SparkSession, fs: FileSystem, base: Path,
+      buckets: Seq[Int]): Option[DataFrame] = {
+    val dirs = buckets.map(k => new Path(base, s"bucket=$k")).filter(fs.exists)
+    if (dirs.isEmpty) None
+    else Some(spark.read.schema(KvUpsertSink.tableSchema)
+      .option("basePath", base.toString)
+      .parquet(dirs.map(_.toString): _*)
+      .withColumn("op", coalesce(col("op"), lit("upsert"))))
+  }
+
+  /** Every bucket id with a live dir: one listing of the table root. */
+  private def liveBuckets(fs: FileSystem, base: Path): Seq[Int] =
+    if (!fs.exists(base)) Nil
+    else fs.listStatus(base).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt).sorted
+
+  /** The distinct `bucket` values of `df`: deduplicated inside each
+    * partition, then on the driver — one stage, no shuffle, and each
+    * partition returns at most numBuckets ints, so it is driver-safe. */
+  private def bucketsOf(df: DataFrame): Array[Int] = {
+    import df.sparkSession.implicits._
+    df.select(col("bucket")).as[Int].mapPartitions(_.toSet.iterator)
+      .collect().distinct.sorted
+  }
 
   /** Heal a swap that died mid-flight: an `_aside_<k>` dir with no live
     * `bucket=<k>` means the crash hit between moving the old bucket aside
@@ -295,24 +340,16 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
     val hconf = spark.sparkContext.hadoopConfiguration
     val base = new Path(path)
     val fs = FileSystem.get(base.toUri, hconf)
+    // column check first: a rejected batch leaves the table untouched
+    val cells = withOp(batch)
     recoverAsides(fs, base)
 
-    val b = withBucket(withOp(batch)).cache()
+    val b = withBucket(cells).cache()
     try {
-      // the touched-bucket set is ≤ numBuckets ints — driver-safe to collect
-      val touched = b.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).sorted
+      val touched = bucketsOf(b)
       if (touched.isEmpty) return
-      val existing =
-        if (fs.exists(base))
-          Some(withOp(spark.read.parquet(path))
-            .filter(col("bucket").isin(touched.map(Integer.valueOf): _*)))
-        else None // first write: the sink creates the table (O7 DDL-on-write)
-      val all = existing match {
-        case Some(e) if e.columns.sorted.sameElements(b.columns.sorted) =>
-          e.select(b.columns.map(col): _*).unionAll(b)
-        case _ => b
-      }
+      // None on the first write: the sink creates the table (O7 DDL-on-write)
+      val all = readBuckets(spark, fs, base, touched).fold(b)(_.unionAll(b))
       // latest op per cell; ts tie: 'delete' < 'upsert' so op ASC lets the
       // delete win (a MERGE's delete branch dominates same-instant updates)
       val w = Window.partitionBy(col("rowkey"), col("cf"), col("qualifier"))
@@ -377,12 +414,12 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
     val base = new Path(path)
     val fs = FileSystem.get(base.toUri, hconf)
     recoverAsides(fs, base)
-    if (!fs.exists(base)) return
-    val all = withOp(spark.read.parquet(path))
+    val all = readBuckets(spark, fs, base, liveBuckets(fs, base)) match {
+      case Some(df) => df
+      case None => return
+    }
     val droppable = col("op") === "delete" && col("ts") < lit(watermark)
-    // ≤ numBuckets ints — driver-safe, same shape as upsert's touched set
-    val touched = all.filter(droppable).select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).sorted
+    val touched = bucketsOf(all.filter(droppable))
     if (touched.isEmpty) return
     val kept = all
       .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
@@ -400,11 +437,25 @@ final class KvUpsertSink(path: String, numBuckets: Int = 16) extends Serializabl
     */
   def read(spark: SparkSession): DataFrame = {
     val base = new Path(path)
-    recoverAsides(
-      FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration), base)
-    withOp(spark.read.parquet(path))
+    val fs = FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration)
+    recoverAsides(fs, base)
+    readBuckets(spark, fs, base, liveBuckets(fs, base))
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], KvUpsertSink.tableSchema))
       .filter(col("op") =!= "delete").drop("bucket", "op")
   }
+}
+
+object KvUpsertSink {
+  import org.apache.spark.sql.types._
+
+  /** The columns every batch carries, in table order; `op` is optional. */
+  val cellColumns: Seq[String] = Seq("rowkey", "cf", "qualifier", "cell_value", "ts")
+
+  /** The on-disk schema: cell columns, `op`, and the `bucket` partition. */
+  private[streaming] val tableSchema: StructType = StructType(
+    cellColumns.map(c => StructField(c, if (c == "ts") TimestampType else StringType)) ++
+      Seq(StructField("op", StringType), StructField("bucket", IntegerType)))
 }
 
 /** Structured Streaming rebuilds of the reference's two pipelines.
@@ -419,6 +470,10 @@ object StreamJobs {
     * record count and distinct messages, emit one formatted summary line to
     * the topic table, upsert the summary cell, and bulk-write distinct
     * messages. batchId replaces the driver-side counter (exactly-once).
+    *
+    * Per-batch Spark jobs are the cost that dominates a micro-batch, so the
+    * batch runs only the ones that do work: one stats action (count and max
+    * event time fused), the topic append, and the sink's upsert.
     */
   def summaryPipeline(
       input: DataFrame,
@@ -437,9 +492,11 @@ object StreamJobs {
         val spark = df.sparkSession
         val cached = df.cache()
         try {
-          val n = cached.count()
-          // deterministic batch time = max event time (reference used wall clock)
-          val batchTs = cached.agg(max(col("timestamp"))).head().getTimestamp(0)
+          // ONE action for both stats. Batch time = max event time,
+          // deterministic (the reference used wall clock).
+          val stats = cached.agg(count(lit(1)), max(col("timestamp"))).head()
+          val n = stats.getLong(0)
+          val batchTs = stats.getTimestamp(1)
           if (batchTs != null) {
             // floorDiv, not /: Java integer division truncates toward zero,
             // which disagrees with unix_timestamp/epoch-floor for pre-1970
@@ -454,13 +511,16 @@ object StreamJobs {
               Seq((outTopic, null: String, summary, batchTs))
                 .toDF("topic", "key", "value", "ts"))
             // bulk table: distinct messages, rowkey = epochSec-key (O6 intent).
-            // Cell ts is the BATCH time, not the surviving row's event time:
-            // dropDuplicates keeps an arbitrary physical row, so a per-row ts
-            // would make the sink's LWW survivor for a colliding rowkey
-            // (one key, several values) task-order dependent; stamping the
-            // batch time pushes ties to the sink's cell_value tiebreak —
-            // deterministic, and what the reference effectively did (puts
-            // stamped at write time ≈ batch wall clock).
+            // Cell ts is the BATCH time, not the row's event time — what the
+            // reference effectively did (puts stamped at write time ≈ batch
+            // wall clock) — so a colliding rowkey (one key, several values)
+            // resolves by the sink's cell_value tiebreak, deterministically.
+            //
+            // No dropDuplicates("key", "value") before the upsert: with one
+            // ts for every bulk cell, duplicate (key, value) pairs become
+            // identical cells, and the sink's LWW max per cell is idempotent,
+            // so they collapse in the merge. The dedup was a shuffle (and a
+            // Spark job) that changed no output byte.
             //
             // ONE upsert per batch, not two (round 13, guide §2.4/§6): the
             // summary cell and the bulk cells used to go through separate
@@ -476,7 +536,6 @@ object StreamJobs {
                 .toDF("rowkey", "cf", "qualifier", "cell_value", "ts")
             kvSink.upsert(spark,
               summaryCell.unionAll(cached
-                .dropDuplicates("key", "value")
                 .select(
                   concat(lit(epochSec.toString), lit("-"), coalesce(col("key"), lit("null")))
                     .as("rowkey"),

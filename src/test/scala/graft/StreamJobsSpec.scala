@@ -19,6 +19,23 @@ class StreamJobsSpec extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_stream").toString
 
+  private val cellCols = Seq("rowkey", "cf", "qualifier", "cell_value", "ts")
+  private def cell(rowkey: String, v: String, sec: Long) =
+    (rowkey, "cf1", "q", v, new Timestamp(sec * 1000))
+  private def liveCells(s: KvUpsertSink): Map[String, String] =
+    s.read(spark).select($"rowkey", $"cell_value").as[(String, String)].collect().toMap
+
+  /** Every file under `root`: relative path -> (size, mtime). */
+  private def tree(root: String): Map[String, (Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(r)
+    try walk.iterator().asScala.map(_.toFile).filter(_.isFile)
+      .map(f => r.relativize(f.toPath).toString -> ((f.length(), f.lastModified())))
+      .toMap
+    finally walk.close()
+  }
+
   test("summaryPipeline emits one reference-shaped summary per batch with batchId") {
     val in = MemoryStream[KafkaShaped]
     val topicSink = new TopicTableSink(tmp() + "/topic")
@@ -526,8 +543,6 @@ class StreamJobsSpec extends SparkSpec {
   test("KvUpsertSink rewrites only the buckets touched by the batch") {
     val path = tmp() + "/kv"
     val sink = new KvUpsertSink(path, numBuckets = 8)
-    def cell(rowkey: String, v: String, sec: Long) =
-      (rowkey, "cf1", "q", v, new Timestamp(sec * 1000))
     // seed: many rowkeys so several buckets exist
     sink.upsert(spark, (1 to 64).map(i => cell(s"k$i", s"v$i", 100))
       .toDF("rowkey", "cf", "qualifier", "cell_value", "ts"))
@@ -556,8 +571,6 @@ class StreamJobsSpec extends SparkSpec {
   test("KvUpsertSink.read heals a swap that died between the renames") {
     val path = tmp() + "/kv"
     val sink = new KvUpsertSink(path, numBuckets = 8)
-    def cell(rowkey: String, v: String, sec: Long) =
-      (rowkey, "cf1", "q", v, new Timestamp(sec * 1000))
     sink.upsert(spark, (1 to 64).map(i => cell(s"k$i", s"v$i", 100))
       .toDF("rowkey", "cf", "qualifier", "cell_value", "ts"))
     val expected = sink.read(spark).count()
@@ -652,6 +665,168 @@ class StreamJobsSpec extends SparkSpec {
     // idempotent: a second pass with the same watermark is a no-op
     sink.compact(spark, new Timestamp(500 * 1000))
     assert(live() === Set("c" -> "vc"))
+  }
+
+  test("KvUpsertSink rejects a batch whose columns differ from the table's; " +
+      "the table is unchanged") {
+    val path = tmp() + "/kv"
+    val sink = new KvUpsertSink(path, numBuckets = 4)
+    sink.upsert(spark, (1 to 16).map(i => cell(s"k$i", s"v$i", 100)).toDF(cellCols: _*))
+    val files = tree(path)
+    val rows = liveCells(sink)
+    val update = Seq(cell("k1", "v1-new", 200)).toDF(cellCols: _*)
+    val err = intercept[IllegalArgumentException](
+      sink.upsert(spark, update.withColumn("extra", lit("x"))))
+    assert(err.getMessage.contains("extra") && err.getMessage.contains("cell_value"),
+      err.getMessage)
+    intercept[IllegalArgumentException](sink.upsert(spark, update.drop("ts")))
+    // nothing written: before the fix, the extra-column batch replaced
+    // k1's whole bucket with its own single row
+    assert(tree(path) === files)
+    assert(liveCells(sink) === rows)
+    // a batch with or without op is accepted
+    sink.upsert(spark, update)
+    sink.upsert(spark, Seq(cell("k2", null, 200)).toDF(cellCols: _*)
+      .withColumn("op", lit("delete")))
+    assert(liveCells(sink) === rows - "k2" + ("k1" -> "v1-new"))
+  }
+
+  test("KvUpsertSink never lists or opens an untouched bucket: a corrupt " +
+      "file there does not disturb an upsert of other buckets") {
+    val path = tmp() + "/kv"
+    val sink = new KvUpsertSink(path, numBuckets = 8)
+    sink.upsert(spark, (1 to 64).map(i => cell(s"k$i", s"v$i", 100)).toDF(cellCols: _*))
+    val bucketOf = spark.read.parquet(path)
+      .select($"rowkey", $"bucket".cast("int")).as[(String, Int)].collect().toMap
+    assert(bucketOf.values.toSet.size === 8)
+    val untouched = bucketOf.values.min
+    val dir = s"$path/bucket=$untouched"
+    // named to sort first: a reader that sampled this bucket for a schema
+    // footer, or listed it at all, would trip over it
+    val corrupt = new java.io.File(dir, "part-00000-corrupt.parquet")
+    java.nio.file.Files.write(corrupt.toPath, "not a parquet file".getBytes("UTF-8"))
+    val before = tree(dir)
+    val keys = bucketOf.collect { case (k, b) if b != untouched => k }.toSeq.sorted.take(8)
+    sink.upsert(spark, keys.map(k => cell(k, s"$k-new", 200)).toDF(cellCols: _*))
+    assert(tree(dir) === before)
+    assert(corrupt.delete())
+    assert(liveCells(sink) === bucketOf.keys.map(k =>
+      k -> (if (keys.contains(k)) s"$k-new" else "v" + k.stripPrefix("k"))).toMap)
+  }
+
+  test("KvUpsertSink merges into a table written before the op column existed") {
+    val path = tmp() + "/kv"
+    val bucket = pmod(xxhash64($"rowkey"), lit(4)).cast("int")
+    val keys = (0 until 40).map("k" + _)
+    val bucketOf = keys.toDF("rowkey").select($"rowkey", bucket)
+      .as[(String, Int)].collect().toMap
+    val t = bucketOf("k0")
+    val Seq(upd, stale, del, ins) = keys.filter(bucketOf(_) == t).take(4)
+    // the pre-MERGE layout: cell columns only, bucketed like the sink
+    val legacy = keys.filter(_ != ins)
+      .map(k => cell(k, s"old-$k", if (k == stale) 300 else 100))
+    legacy.toDF(cellCols: _*).withColumn("bucket", bucket)
+      .write.partitionBy("bucket").parquet(path)
+    val sink = new KvUpsertSink(path, numBuckets = 4)
+    assert(liveCells(sink) === legacy.map(c => c._1 -> c._4).toMap)
+    sink.upsert(spark, Seq(
+      cell(upd, "new", 200) -> "upsert",   // newer than the legacy cell: wins
+      cell(stale, "new", 200) -> "upsert", // older than the legacy cell: loses
+      cell(del, null, 200) -> "delete",    // removes a legacy cell
+      cell(ins, "new", 200) -> "upsert")   // inserts
+      .map { case ((k, cf, q, v, ts), op) => (k, cf, q, v, ts, op) }
+      .toDF(cellCols :+ "op": _*))
+    // only bucket t was rewritten; the others still lack op, and the
+    // fixed-schema reader serves both layouts at once
+    assert(!spark.read.parquet(s"$path/bucket=${(t + 1) % 4}").columns.contains("op"))
+    assert(liveCells(sink) ===
+      legacy.map(c => c._1 -> c._4).toMap - del + (upd -> "new") + (ins -> "new"))
+  }
+
+  test("summaryPipeline's KV table equals an independent last-write-wins " +
+      "recompute: duplicate pairs, multi-valued keys, null keys") {
+    def at(key: String, value: String, ms: Long, off: Long) =
+      KafkaShaped(key, value, "t", 0, off, new Timestamp(ms))
+    // both batches' times fall in epoch second 1001, so their rowkeys
+    // collide across batches and the later batch time wins
+    val b1 = Seq(at("a", "1", 1000000, 0), at("a", "1", 1000100, 1),
+      at("a", "1", 1000200, 2), at("a", "2", 1000300, 3), at("a", "9", 1000400, 4),
+      at(null, "x", 1000500, 5), at(null, "y", 1000600, 6), at("b", "2", 1001200, 7))
+    val b2 = Seq(at("a", "0", 1001300, 8), at("a", "0", 1001400, 9),
+      at(null, "z", 1001500, 10), at("d", "1", 1001500, 11),
+      at("d", "5", 1001550, 12), at("d", "3", 1001600, 13), at("d", "5", 1001600, 14))
+    val in = MemoryStream[KafkaShaped]
+    val topicSink = new TopicTableSink(tmp() + "/topic")
+    val kvSink = new KvUpsertSink(tmp() + "/kv")
+    val q = StreamJobs.summaryPipeline(in.toDF(), "t", "out",
+      topicSink, kvSink, Trigger.ProcessingTime(0))
+    Seq(b1, b2).foreach { b => in.addData(b); q.processAllAvailable() }
+    graft.streaming.StreamQuiet.quietStop(q)
+
+    val fmt = new java.text.SimpleDateFormat("yyyy/MM/dd HH:mm")
+    fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
+    val cells = Seq(b1, b2).zipWithIndex.flatMap { case (b, i) =>
+      val ts = b.map(_.timestamp).maxBy(_.getTime)
+      val sec = Math.floorDiv(ts.getTime, 1000L)
+      val summary = s"Spark - date:${fmt.format(ts)} from topic: t - number of " +
+        s"RDD (batches): ${i + 1} - number of message ${b.size}"
+      (s"$sec", "messages", summary, ts) +: b.map(r => (
+        s"$sec-${Option(r.key).getOrElse("null")}", "content",
+        if (r.key == null) "kafka empty message" else s"${r.key}--|--${r.value}", ts))
+    }
+    val expected = cells.groupBy(c => (c._1, c._2)).values
+      .map(_.maxBy(c => (c._4.getTime, c._3))).toSet
+    val got = kvSink.read(spark).filter($"cf" === "cf1")
+      .select($"rowkey", $"qualifier", $"cell_value", $"ts")
+      .as[(String, String, String, Timestamp)].collect()
+    assert(got.length === kvSink.read(spark).count())
+    assert(got.toSet === expected)
+    // the recompute itself, spelled out: newer batch beats a larger value,
+    // a larger value wins within a batch, null keys share one cell
+    assert(got.collect { case (k, "content", v, _) => k -> v }.toMap === Map(
+      "1001-a" -> "a--|--0", "1001-b" -> "b--|--2", "1001-d" -> "d--|--5",
+      "1001-null" -> "kafka empty message"))
+  }
+
+  test("summaryPipeline's steady micro-batch runs exactly 7 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val marker = "graft.test.drain"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty(marker) != null) drained.countDown()
+          else Option(p.getProperty("streaming.sql.batchId")).foreach(b =>
+            seen.add(p.getProperty("sql.streaming.queryId") -> b))
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val in = MemoryStream[KafkaShaped]
+      val q = StreamJobs.summaryPipeline(in.toDF(), "t", "out",
+        new TopicTableSink(tmp() + "/topic"), new KvUpsertSink(tmp() + "/kv"),
+        Trigger.ProcessingTime(0))
+      // batch 0 creates both sinks; batch 1 re-touches the same KV buckets
+      in.addData(rec("a", "1", 1000, 0), rec("a", "1", 1000, 1), rec("b", "2", 1000, 2))
+      q.processAllAvailable()
+      in.addData(rec("a", "3", 1000, 3), rec("b", "2", 1000, 4))
+      q.processAllAvailable()
+      val qid = q.id.toString
+      graft.streaming.StreamQuiet.quietStop(q)
+      // listener events arrive in order: once this marked job's start is
+      // seen, every batch job's start has been counted
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val perBatch = seen.asScala.toSeq.filter(_._1 == qid)
+        .groupBy(_._2).map { case (b, js) => b -> js.size }
+      // 13 before the fused stats action, the dropped dedup shuffle and the
+      // known-schema bucket read; a new per-batch action must show up here
+      assert(perBatch.get("1") === Some(7), perBatch)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("dropDuplicatesWithinWatermark evicts state past the watermark") {
